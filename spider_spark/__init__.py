@@ -8,8 +8,8 @@ the docstrings in this package.
 
 Layout:
     functions/  — vectorized UDFs + pure-Python kernels (tokenizer, URL
-                  canonicalizer, CJK tables, bloom/cuckoo filters, text
-                  analysis, minhash/simhash)
+                  canonicalizer, CJK tables, text analysis,
+                  minhash/simhash)
     sources/    — deterministic synthetic corpus generator + testdata loaders
     state/      — snapshot-versioned parquet table store (Iceberg-semantics
                   commit protocol: atomic manifest swap, lineage checkpoints)

@@ -71,27 +71,16 @@ class CrawlConfig:
     num_salts: int = 4               # sub-partitions for hot-host ranking skew
     # bucket(url_hash) partition count.  SIZING RULE (VERDICT r3 #4):
     # pick nb = ceil(expected_frontier_keys / target_keys_per_bucket)
-    # at bootstrap, targeting ~4M keys/bucket — each bucket's Bloom
-    # bitmap is then keys·bits_per_key·4x-headroom ≈ 4M·10·4 bits
-    # ≈ 20 MB, built inside ONE task comfortably.  At 10^10 URLs that
-    # is nb ≈ 2500 (≫ cores, so commit/filter writes stay parallel);
-    # the default 32 suits the ≤10^8-key test/bench scale.  A frontier
-    # that outgrows its sizing migrates with engine.rebucket(new_nb)
-    # (one O(frontier) job, filters rebuilt, one atomic swap).
+    # at bootstrap, targeting ~4M keys/bucket.  At 10^10 URLs that is
+    # nb ≈ 2500 (≫ cores, so commit writes stay parallel); the default
+    # 32 suits the ≤10^8-key test/bench scale.  A frontier that
+    # outgrows its sizing migrates with engine.rebucket(new_nb) (one
+    # O(frontier) job, one atomic swap).
     frontier_buckets: int = 32
     # id/seq assignment parallelism: >1 → two-pass range-partitioned
     # sequence (per-partition counts → offsets → partition-local
     # row_number); 1 → single global window (tiny rounds only)
     seq_partitions: int = 8
-    bloom_bits_per_key: int = 10
-    # the sharded Bloom/cuckoo prefilters only pay for themselves once
-    # the frontier outgrows what the exact anti-join handles trivially;
-    # below this row count the engine runs no filter jobs at all
-    # (tests set 0 to force the filter path on tiny corpora)
-    filter_min_keys: int = 100_000
-    # per-bucket cuckoo "done" table (deletion-capable queued-or-done
-    # view backing force-requeue, Spider.java:185-188)
-    use_cuckoo: bool = True
     # rounds whose total working set is below this coalesce their
     # commit writes to one task — partitioned writes otherwise pay
     # ~n_buckets empty tasks per tiny round

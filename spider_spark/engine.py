@@ -15,35 +15,28 @@ Spider.java:206-255,415-541):
   5. postings  — operators.postings (E1-E6) → append
   6. statuses  — INDEXED / SUCCEEDED(redirect) / FAILED merges (F2-F4)
   7. admit     — outlinks + redirect targets (operators.admission, B1-B5,
-                 F1) → frontier union.  At scale the sharded per-bucket
-                 Bloom table (operators.seenfilter) prefilters the
-                 dedup anti-join, and the confirm join reads ONLY the
-                 buckets still holding maybe-seen rows
+                 F1) → frontier union.  Dedup is one exact left_anti
+                 join against the frontier at every frontier size
+                 (Spider's URL-seen set is an exact unique index,
+                 db/PerstRoot.java:46-67)
   8. commit    — one atomic catalog swap for all tables (F5); a crashed
                  round commits nothing and is replayed (NOT_PUSHED→QUEUED
                  analog, LibraryBuffer.java:97-102).  The frontier is
                  BUCKETED by pmod(xxhash64(url), frontier_buckets) and
                  sub-partitioned by status: only buckets containing this
-                 round's status updates or new admissions are rewritten.
-                 The Bloom/cuckoo filter tables are themselves bucketed
-                 snapshot tables committed IN THE SAME atomic swap, so
-                 filter state can never go stale relative to the
-                 frontier (a false negative would admit a URL twice)
+                 round's status updates or new admissions are rewritten
 
 Per-round job discipline (the driver-bench lesson from round 2: fixed
 per-round overhead, not data volume, dominated k≤1024 rounds): a round
 runs  (a) one select collect,  (b) one span-feed materialization, then
 (c) the tokenize materialization CONCURRENT with the admission jobs
-(canonicalize+probe, bucket-distinct collect, two-pass id assignment,
-one fused admissions+touched-buckets aggregation) on two driver
-threads,  (d) 3-way-parallel commit prep (frontier merge ∥ postings
-delta ∥ filter-update DAGs), and  (e) the concurrent commit writes —
-with commit outputs coalesced to one task when the working set is
-tiny.  Filter maintenance only engages past ``config.filter_min_keys``
-frontier rows.  (Round-4 N-vs-4N phase tables drove the overlap: the
-serialized admission+commit prelude was ~25s of core-count-independent
-wall per round; overlapped, every phase but the ~2s select collect
-scales 3.2-4.8x from 4→16 cores.)
+(canonicalize + anti-join, two-pass id assignment, one fused
+admissions+touched-buckets aggregation) on two driver threads, and
+(d) the concurrent commit writes — with commit outputs coalesced to one
+task when the working set is tiny.  (Round-4 N-vs-4N phase tables drove
+the overlap: the serialized admission+commit prelude was ~25s of
+core-count-independent wall per round; overlapped, every phase but the
+~2s select collect scales 3.2-4.8x from 4→16 cores.)
 
 Every source of nondeterminism is pinned (SURVEY §7.3): ids are
 admission sequence numbers, last_change is (round<<32)|seq in 64-bit
@@ -64,7 +57,7 @@ import sys
 import time
 
 from .config import SEQ_SHIFT, CrawlConfig
-from .operators import admission, parse, postings, scheduling, seenfilter
+from .operators import admission, parse, postings, scheduling
 from .state.store import SnapshotStore
 
 _TIMING = os.environ.get("SPIDER_TIMING", "") == "1"
@@ -87,7 +80,6 @@ class CrawlEngine:
         config: CrawlConfig | None = None,
         robots: DataFrame | None = None,
         hosts: DataFrame | None = None,
-        use_bloom: bool = True,
     ):
         self.spark = spark
         self.store = store
@@ -95,7 +87,6 @@ class CrawlEngine:
         self.config = config or CrawlConfig()
         self.robots = robots
         self.hosts = hosts
-        self.use_bloom = use_bloom
         # one retention policy: archived as_of catalogs pin their dirs
         # through gc, so the store's snapshot window must equal the
         # engine's gc grace window or expiry could never reclaim space
@@ -111,144 +102,14 @@ class CrawlEngine:
     @staticmethod
     def _bucket_expr(nb: int):
         """Bucket id of a row's url — THE bucket formula, delegated to
-        seenfilter.bucket_of so frontier bucketing and filter bucketing
-        can never desynchronize (a split formula drifting would admit
-        URLs twice)."""
-        return seenfilter.bucket_of(F.col("url"), nb)
+        admission.bucket_of so frontier bucketing and the bucket-pruned
+        confirm join can never desynchronize."""
+        return admission.bucket_of(F.col("url"), nb)
 
     def _documents(self) -> DataFrame:
         if self._docs_df is None:
             self._docs_df = self.spark.read.parquet(self.documents_path)
         return self._docs_df
-
-    # -- filter maintenance (B4/B5 sharded prefilters) ---------------------
-    #
-    # The per-bucket Bloom (url-seen) and cuckoo (done := non-QUEUED,
-    # deletion-capable) tables live in the snapshot store and swap
-    # atomically with the frontier.  A bucket's Bloom is REBUILT from
-    # that bucket's merged rows whenever the bucket gains new URLs —
-    # those rows are already shuffled for the frontier rewrite, the
-    # sizing self-adjusts, and no driver ever holds a bitmap.  The
-    # cuckoo side updates incrementally (adds on fetch-completion,
-    # deletes on force-requeue) with an overflow→rebuild fallback.
-
-    def _filters_state(self, cat: dict, next_id: int) -> dict:
-        buckets = cat.get("buckets", {})
-        has_bloom = bool(buckets.get("bloom", {}).get("dirs"))
-        has_done = bool(buckets.get("done", {}).get("dirs"))
-        scale = next_id >= self.config.filter_min_keys
-        return {
-            "has_bloom": has_bloom,
-            "has_done": has_done,
-            "bloom_maintain": has_bloom or (self.use_bloom and scale),
-            "cuckoo_maintain": has_done or (self.config.use_cuckoo and scale),
-        }
-
-    def _filter_updates(
-        self,
-        fs: dict,
-        bloom_df: DataFrame | None,
-        done_df: DataFrame | None,
-        frontier_final: DataFrame,
-        nb: int,
-        touched: list[int],
-        new_bks: list[int],
-        migrate: bool,
-        cuckoo_changes: DataFrame | None,
-        cleanup: list,
-        new_rows: DataFrame | None = None,
-        barrier=None,
-    ) -> dict[str, tuple[DataFrame, int]]:
-        """Bucket-table updates for the Bloom and cuckoo filters, to be
-        committed atomically with the frontier.  ``frontier_final``
-        must be cached by the caller when this returns anything.
-
-        ``barrier`` (optional callable): invoked before any path that
-        CONSUMES ``frontier_final`` (full build, overflow rebuild) — the
-        caller passes the frontier-materialization future's ``result``
-        so this method can run on a side thread concurrent with that
-        materialization without racing on the unmaterialized cache.
-        The common incremental path (no overflow) never blocks on it."""
-        cfg = self.config
-        b = self._bucket_expr(nb)
-        out: dict[str, tuple[DataFrame, int]] = {}
-        need_full = (
-            (fs["bloom_maintain"] and bloom_df is None)
-            or (fs["cuckoo_maintain"] and done_df is None)
-        )
-        full_rows = None
-        if need_full:
-            if barrier is not None:
-                barrier()
-            # one-time activation (or layout migration): the full URL
-            # set = this round's merged buckets ∪ the untouched buckets
-            full_rows = frontier_final.select("url", "status")
-            if not migrate:
-                rest_ids = [bk for bk in self.store.populated_buckets("frontier")
-                            if bk not in set(touched)]
-                rest = (self.store.read_buckets(self.spark, "frontier", rest_ids)
-                        if rest_ids else None)
-                if rest is not None:
-                    full_rows = full_rows.unionByName(
-                        rest.select("url", "status"))
-
-        if fs["bloom_maintain"]:
-            if bloom_df is None:
-                out["bloom"] = (
-                    seenfilter.build_bucket_blooms(
-                        full_rows.select("url"), nb, cfg.bloom_bits_per_key)
-                    .withColumn("bucket", F.col("bkt")),
-                    nb,
-                )
-            elif new_bks and new_rows is not None:
-                # incremental: OR only the NEW urls into their buckets'
-                # filters — O(n_new), never O(bucket rows).  A bucket
-                # over its sized capacity rebuilds from its merged
-                # frontier rows (rare; one tiny flag collect)
-                upd = seenfilter.update_bucket_blooms(
-                    new_rows.select("url"), bloom_df, nb,
-                    cfg.bloom_bits_per_key).cache()
-                cleanup.append(upd)
-                over = [r["bkt"] for r in
-                        upd.filter("overflow").select("bkt").collect()]
-                if over:
-                    if barrier is not None:
-                        barrier()
-                    rebuilt = seenfilter.build_bucket_blooms(
-                        frontier_final.filter(b.isin(over)).select("url"),
-                        nb, cfg.bloom_bits_per_key)
-                    upd = upd.filter(~F.col("bkt").isin(over)) \
-                             .unionByName(rebuilt)
-                out["bloom"] = (upd.withColumn("bucket", F.col("bkt")), nb)
-
-        if fs["cuckoo_maintain"]:
-            if done_df is None:
-                done_src = full_rows.filter(
-                    F.col("status") != "QUEUED").select("url")
-                out["done"] = (
-                    seenfilter.build_bucket_cuckoos(done_src, nb)
-                    .withColumn("bucket", F.col("bkt")),
-                    nb,
-                )
-            elif cuckoo_changes is not None:
-                upd = seenfilter.update_bucket_cuckoos(
-                    cuckoo_changes, done_df, nb).cache()
-                cleanup.append(upd)
-                over = [r["bkt"] for r in
-                        upd.filter("overflow").select("bkt").collect()]
-                if over:
-                    if barrier is not None:
-                        barrier()
-                    rebuilt = seenfilter.build_bucket_cuckoos(
-                        frontier_final.filter(
-                            b.isin(over) & (F.col("status") != "QUEUED")
-                        ).select("url"),
-                        nb,
-                    )
-                    upd = upd.filter(~F.col("bkt").isin(over)) \
-                             .unionByName(rebuilt)
-                out["done"] = (upd.withColumn("bucket", F.col("bkt")), nb)
-        return out
 
     def _maybe_compact(self) -> None:
         cat = self.store.read_catalog()
@@ -268,18 +129,17 @@ class CrawlEngine:
             self.store.gc_orphans(keep_recent=self.config.gc_retain_rounds)
 
     def rebucket(self, new_nb: int) -> None:
-        """Migrate the frontier (and its filter tables) to a new bucket
-        count — the growth path for a frontier that outgrew its
-        bootstrap-time sizing (VERDICT r3 missing #3).
+        """Migrate the frontier to a new bucket count — the growth path
+        for a frontier that outgrew its bootstrap-time sizing (VERDICT
+        r3 missing #3).
 
         Sizing rule (config.frontier_buckets docstring has the
         arithmetic): nb = ceil(expected_keys / target_keys_per_bucket)
         with ~4M keys/bucket as the target — at 10^10 URLs that is
-        ~2500 buckets, each bucket's Bloom bitmap 4M·10bits·4x ≈ 20 MB,
-        built inside ONE task.  When the frontier outgrows that, this
-        one-shot job reads ALL buckets, re-hashes to the new modulus,
-        rebuilds the per-bucket filters, and commits everything in one
-        atomic swap (its own round, like enqueue).  Nothing in the
+        ~2500 buckets.  When the frontier outgrows that, this one-shot
+        job reads ALL buckets, re-hashes to the new modulus, and
+        commits everything in one atomic swap (its own round, like
+        enqueue).  Nothing in the
         reference corresponds — Perst B-trees grow node-by-node
         (org/garret/perst/impl/Btree.java); on Iceberg this is a
         partition-spec evolution + full rewrite.
@@ -300,38 +160,14 @@ class CrawlEngine:
             .withColumn("bucket", b)
             .withColumn("_pstatus", F.col("status"))
             .repartition(new_nb, F.col("bucket"))
-            .cache()
         )
-        final.count()  # materialize before the concurrent writers
-        bucket_updates = {"frontier": (final, new_nb)}
-        fs = self._filters_state(cat, next_id)
-        # per-bucket filters are keyed by pmod(hash, nb) — a new
-        # modulus invalidates every row, so rebuild from the re-read
-        # frontier rather than carrying anything over
-        if fs["has_bloom"]:
-            bucket_updates["bloom"] = (
-                seenfilter.build_bucket_blooms(
-                    final.select("url"), new_nb,
-                    self.config.bloom_bits_per_key)
-                .withColumn("bucket", F.col("bkt")),
-                new_nb,
-            )
-        if fs["has_done"]:
-            bucket_updates["done"] = (
-                seenfilter.build_bucket_cuckoos(
-                    final.filter(F.col("status") != "QUEUED").select("url"),
-                    new_nb)
-                .withColumn("bucket", F.col("bkt")),
-                new_nb,
-            )
         self.store.commit_round(
             rnd + 1, rewrites={}, appends={},
-            bucket_updates=bucket_updates,
-            rebucket={"frontier", "bloom", "done"},
+            bucket_updates={"frontier": (final, new_nb)},
+            rebucket={"frontier"},
             metrics={"next_id": next_id, "fetched": 0, "admitted": 0,
                      "rebucketed": {"from": nb_old, "to": new_nb}},
         )
-        final.unpersist()
 
     # -- bootstrap (A1 seed source) ---------------------------------------
 
@@ -382,28 +218,14 @@ class CrawlEngine:
     def enqueue(self, urls: list[str], comment: str = "manually",
                 force: bool = True) -> int:
         """Out-of-band admission (web/MainPage.java:53-70 analog).  Runs
-        as its own mini-round commit.  Force-requeues DELETE the moved
-        pages from the cuckoo done-table (the deletions-on-retry path
-        Bloom cannot express)."""
+        as its own mini-round commit.  Force-requeue moves existing
+        non-QUEUED pages back to QUEUED (Spider.java:185-188); a store
+        that was never bootstrapped gets its frontier created here."""
         cat = self.store.read_catalog()
         rnd = cat["round"]
         next_id = cat["lineage"][-1]["metrics"]["next_id"] if cat["lineage"] else 0
         nb = self._n_buckets()
         b = self._bucket_expr(nb)
-        migrate = self.store.bucket_sub("frontier") != "_pstatus"
-        # same dedup sourcing as run_round: on the bucketed layout the
-        # confirm join reads ONLY the buckets holding maybe-seen rows
-        # (an enqueue batch touches a handful of buckets; the full
-        # multi-TB frontier never enters the join at 10^10 scale)
-        frontier = self.store.read(self.spark, "frontier") if migrate else None
-        reader = (None if migrate else
-                  (lambda bks: self.store.read_buckets(
-                      self.spark, "frontier", bks)))
-        fs = self._filters_state(cat, next_id)
-        bloom_df = (self.store.read(self.spark, "bloom")
-                    if fs["has_bloom"] else None)
-        done_df = (self.store.read(self.spark, "done")
-                   if fs["has_done"] else None)
 
         cand = self.spark.createDataFrame(
             [(-1, 0, i, u, comment, force) for i, u in enumerate(urls)],
@@ -417,13 +239,17 @@ class CrawlEngine:
         if small_list:
             cand = cand.repartition(1)
         # the enqueue commit IS its own round (rnd+1), so its sequence
-        # space starts fresh — no overlap with crawl-round sequences
+        # space starts fresh — no overlap with crawl-round sequences.
+        # The confirm join reads ONLY the buckets the batch hashes into
+        # (an enqueue batch touches a handful of buckets; the full
+        # multi-TB frontier never enters the join at 10^10 scale)
         cleanup: list = []
         new_rows, forced = admission.admit(
-            self.spark, cand, frontier, self.config, self.robots,
+            self.spark, cand, None, self.config, self.robots,
             rnd=rnd + 1, seq_start=0, next_id=next_id,
-            bloom_df=bloom_df, n_buckets=nb, done_df=done_df,
-            frontier_for_buckets=reader,
+            n_buckets=nb,
+            frontier_for_buckets=lambda bks: self.store.read_buckets(
+                self.spark, "frontier", bks),
             cleanup=cleanup, seq_partitions=1 if small_list else None,
             with_force=True,
         )
@@ -439,13 +265,8 @@ class CrawlEngine:
         stats = sides.groupBy("_b").agg(F.sum("_n").alias("_nn")).collect()
         n_new = int(sum(r["_nn"] for r in stats))
         touched = sorted(r["_b"] for r in stats)
-        new_bks = sorted(r["_b"] for r in stats if r["_nn"] > 0)
 
-        if migrate:
-            base = frontier
-            touched = self.store.populated_buckets("frontier") or touched
-        else:
-            base = self.store.read_buckets(self.spark, "frontier", touched)
+        base = self.store.read_buckets(self.spark, "frontier", touched)
         if base is None:
             base = new_rows.limit(0)
         updated = self._apply_updates(base, None, forced)
@@ -458,27 +279,12 @@ class CrawlEngine:
         if small:
             frontier_final = frontier_final.coalesce(1)
         else:
-            nparts = nb if migrate else max(1, len(touched))
-            frontier_final = frontier_final.repartition(nparts, F.col("bucket"))
+            frontier_final = frontier_final.repartition(
+                max(1, len(touched)), F.col("bucket"))
 
-        bucket_updates = {"frontier": (frontier_final, nb)}
-        if fs["bloom_maintain"] or fs["cuckoo_maintain"]:
-            frontier_final = frontier_final.cache()
-            cleanup.append(frontier_final)
-            bucket_updates["frontier"] = (frontier_final, nb)
-            cuckoo_changes = (
-                forced.select("url", F.lit("del").alias("op"))
-                if forced is not None else None
-            )
-            frontier_final.count()  # materialize before concurrent writers
-            bucket_updates.update(self._filter_updates(
-                fs, bloom_df, done_df, frontier_final, nb,
-                touched, new_bks, migrate, cuckoo_changes, cleanup,
-                new_rows=new_rows,
-            ))
         self.store.commit_round(
             rnd + 1, rewrites={}, appends={},
-            bucket_updates=bucket_updates,
+            bucket_updates={"frontier": (frontier_final, nb)},
             metrics={"next_id": next_id + n_new, "fetched": 0,
                      "admitted": n_new},
         )
@@ -551,16 +357,8 @@ class CrawlEngine:
         nb = self._n_buckets()
         b = self._bucket_expr(nb)
 
-        # status-pruned QUEUED read; a legacy (un-sub-partitioned or
-        # single-dir) frontier is migrated by one full rewrite
-        migrate = self.store.bucket_sub("frontier") != "_pstatus"
-        frontier_full = None
-        if migrate:
-            frontier_full = self.store.read(self.spark, "frontier")
-            queued = (frontier_full.filter(F.col("status") == "QUEUED")
-                      if frontier_full is not None else None)
-        else:
-            queued = self.store.read_status(self.spark, "frontier", "QUEUED")
+        # status-pruned QUEUED read
+        queued = self.store.read_status(self.spark, "frontier", "QUEUED")
         if queued is None:
             self.store.commit_round(
                 rnd, rewrites={}, appends={},
@@ -667,20 +465,8 @@ class CrawlEngine:
             )
         )
 
-        # admission: sharded-Bloom prefilter + bucket-pruned confirm
-        # join once the filter tables exist; plain anti-join below the
-        # activation threshold (tiny frontiers need no prefilter)
-        fs = self._filters_state(cat, next_id)
-        bloom_df = (self.store.read(self.spark, "bloom")
-                    if fs["has_bloom"] else None)
-        reader = None
-        frontier_arg = None
-        if bloom_df is not None and not migrate:
-            reader = lambda bks: self.store.read_buckets(
-                self.spark, "frontier", bks)
-        else:
-            frontier_arg = (frontier_full if migrate
-                            else self.store.read(self.spark, "frontier"))
+        # admission dedup: one exact anti-join against the frontier
+        frontier = self.store.read(self.spark, "frontier")
         cleanup: list = []
         # small rounds skip the two-pass machinery: its extra jobs
         # (range sample + stats collect) cost more than a one-partition
@@ -690,9 +476,8 @@ class CrawlEngine:
 
         # ---- overlapped parse ∥ admission -------------------------------
         # The tokenize materialization (the round's dominant CPU) and the
-        # admission pipeline (several driver-blocking jobs: cand cache +
-        # bucket-distinct collect, range-partitioned id assignment, the
-        # fused stats agg) consume DISJOINT inputs once ``spans`` is
+        # admission pipeline (several driver-blocking jobs: cand cache,
+        # range-partitioned id assignment, the fused stats agg) consume DISJOINT inputs once ``spans`` is
         # materialized: tokenize reads the span text, admission reads the
         # span links.  Serialized, admission's ~12-15s of mostly-latency
         # jobs sit on the round's critical path at EVERY core count (the
@@ -710,16 +495,14 @@ class CrawlEngine:
         def _admit_side():
             t0 = time.time()
             rows, _ = admission.admit(
-                self.spark, candidates, frontier_arg, cfg, self.robots,
+                self.spark, candidates, frontier, cfg, self.robots,
                 rnd=rnd, seq_start=k + 1, next_id=next_id,
-                bloom_df=bloom_df, n_buckets=nb, frontier_for_buckets=reader,
                 cleanup=cleanup, seq_partitions=seq_parts, with_force=False,
             )
             rows = rows.cache()
-            # ONE fused job: admission count + per-bucket split + the full
-            # touched-bucket set (admissions ∪ status updates) — replaces
-            # round 2's three separate actions (new count, touched-buckets
-            # collect, bloom fold-in)
+            # ONE fused job: admission count + the full touched-bucket
+            # set (admissions ∪ status updates) — replaces round 2's
+            # separate new-count and touched-buckets actions
             st = (
                 rows.select(b.alias("_b"), F.lit(1).alias("_n"))
                 .unionByName(
@@ -739,7 +522,6 @@ class CrawlEngine:
         _t = _tick("parse∥admit", _t)
         n_new = int(sum(r["_nn"] for r in stats))
         touched = sorted(r["_b"] for r in stats)
-        new_bks = sorted(r["_b"] for r in stats if r["_nn"] > 0)
         if k + 1 + n_new >= (1 << SEQ_SHIFT):
             raise OverflowError(
                 f"round {rnd} sequence space overflow: {k + 1 + n_new} "
@@ -749,11 +531,7 @@ class CrawlEngine:
         # bucketed frontier MERGE: only buckets holding this round's
         # status updates (⊆ selected) or new admissions are re-read,
         # merged, and rewritten — untouched buckets stay immutable
-        if migrate:
-            base = frontier_full
-            touched = self.store.populated_buckets("frontier") or touched
-        else:
-            base = self.store.read_buckets(self.spark, "frontier", touched)
+        base = self.store.read_buckets(self.spark, "frontier", touched)
         if base is None:
             base = new_rows.limit(0)
         updated = self._apply_updates(base, updates, None)
@@ -769,8 +547,8 @@ class CrawlEngine:
         if small:
             frontier_final = frontier_final.coalesce(1)
         else:
-            nparts = nb if migrate else max(1, len(touched))
-            frontier_final = frontier_final.repartition(nparts, F.col("bucket"))
+            frontier_final = frontier_final.repartition(
+                max(1, len(touched)), F.col("bucket"))
 
         crawl_log = selected.select(
             F.lit(rnd).alias("round"), "rank", "url"
@@ -779,54 +557,11 @@ class CrawlEngine:
             postings_delta = postings_delta.coalesce(1)
             crawl_log = crawl_log.coalesce(1)
 
-        bucket_updates = {"frontier": (frontier_final, nb)}
-        if fs["bloom_maintain"] or fs["cuckoo_maintain"]:
-            frontier_final = frontier_final.cache()
-            cleanup.append(frontier_final)
-            bucket_updates["frontier"] = (frontier_final, nb)
-            done_df = (self.store.read(self.spark, "done")
-                       if fs["has_done"] else None)
-            # every fetched page leaves QUEUED (INDEXED/SUCCEEDED/FAILED
-            # are all "done") → adds; crawl rounds never force-requeue,
-            # so deletes only come from enqueue()
-            cuckoo_changes = updates.select("url", F.lit("add").alias("op"))
-            # materialize the cached merge ONCE before anything fans
-            # out: the concurrent commit writers and the filter-update
-            # DAGs would otherwise race on the unmaterialized cache and
-            # EACH recompute the base-read + merge (observed as every
-            # writer taking the long pole's wall time).  The postings
-            # delta is independent of the frontier merge, so its
-            # (expensive: token groupBy) materialization runs on a
-            # second thread — the two DAGs' stage tails interleave and
-            # fill cores that a serial merge would leave idle (round-4
-            # N-vs-4N phase logs: commit scaled 2.2x of 4x because each
-            # sub-DAG alone under-fills 28 cores).  The filter-update
-            # DAGs (per-bucket Bloom OR-in + cuckoo adds, each ending in
-            # a tiny overflow-flag collect) consume only caches that are
-            # already materialized (new_rows, selected, meta) — they run
-            # on a THIRD thread, blocking on the frontier merge (via
-            # ``barrier``) only on the rare overflow-rebuild path, so
-            # the commit's serial prelude is max(merge, postings,
-            # filters), not their sum
-            postings_delta = postings_delta.cache()
-            cleanup.append(postings_delta)
-            from concurrent.futures import ThreadPoolExecutor
-            with ThreadPoolExecutor(max_workers=3) as _pool:
-                _f = _pool.submit(frontier_final.count)
-                _p = _pool.submit(postings_delta.count)
-                _u = _pool.submit(
-                    self._filter_updates, fs, bloom_df, done_df,
-                    frontier_final, nb, touched, new_bks, migrate,
-                    cuckoo_changes, cleanup, new_rows=new_rows,
-                    barrier=_f.result)
-                _f.result(), _p.result()
-                bucket_updates.update(_u.result())
-
         self.store.commit_round(
             rnd,
             rewrites={},
             appends={"postings": postings_delta, "crawl_log": crawl_log},
-            bucket_updates=bucket_updates,
+            bucket_updates={"frontier": (frontier_final, nb)},
             metrics={"next_id": next_id + n_new, "fetched": k,
                      "admitted": n_new},
         )
@@ -888,8 +623,8 @@ class CrawlEngine:
     def rollback(self, to_round: int) -> None:
         """Restore the crawl to a retained earlier round (poisoned-round
         recovery; Iceberg rollback_to_snapshot analog).  Frontier,
-        postings, crawl log, and the seen-filter tables all live in the
-        one catalog, so they roll back together — the engine's
+        postings and crawl log all live in the one catalog, so they
+        roll back together — the engine's
         determinism then replays the abandoned rounds bit-identically
         under an unchanged config/corpus, or diverges intentionally
         under the fixed config that motivated the rollback."""

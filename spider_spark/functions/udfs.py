@@ -4,7 +4,7 @@ The `input_hint` mandates pandas/Arrow UDFs only — no per-row Python.
 Everything that CAN stay JVM-side does (stop-word predicate, CJK char
 classes via regex, positions via windows); Python appears only where
 exact automaton parity demands it (tokenizer, canonicalizer, URL
-extraction, bloom probe).
+extraction).
 """
 
 from __future__ import annotations

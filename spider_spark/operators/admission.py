@@ -6,10 +6,9 @@ Candidates flow through, in reference order:
   B2 keyword badlist (substring)
   B3 canonicalization (USK-rule graft; vectorized Arrow UDF)
   robots gating (graft axis B; prefix test on the canonical path)
-  B4 dedup against the frontier (sharded-Bloom prefilter + exact
-     left_anti over only the maybe-seen rows' buckets)
-  B5 force-requeue of existing non-QUEUED pages (cuckoo done-filter
-     prefilter when available — it supports the deletions B5 implies)
+  B4 dedup against the frontier (exact left_anti join; an enqueue batch
+     reads only the frontier buckets its candidates hash into)
+  B5 force-requeue of existing non-QUEUED pages (exact status join)
   F1 get-or-create: new rows enter QUEUED with deterministic id/seq
 
 Deterministic admission order: candidates sorted by
@@ -24,15 +23,11 @@ Scale notes (10^10 frontier):
     row_number — the same total order as a global window with NO
     single-partition exchange, so a 10^7-candidate round fans across
     the cluster instead of funnelling through one task.
-  * the exact anti-join never sees the full frontier: the per-bucket
-    Bloom probe (operators/seenfilter.py) short-circuits the (dominant)
-    definitely-new candidates, and the confirm join reads ONLY the
-    frontier buckets that still hold maybe-seen rows
-    (``frontier_for_buckets``) — at 10^10 rows the frontier side of the
-    join shrinks from ~TBs to the touched buckets' files.
-  * the probe result ``_maybe`` is computed INTO the cached candidate
-    set, so the probe cogroup runs once no matter how many admission
-    branches (hit / anti-join / forced / new) consume it.
+  * the bucket-pruned confirm join (``frontier_for_buckets``) reads
+    ONLY the frontier buckets the candidates hash into — for an enqueue
+    batch that is a handful of buckets, not the whole frontier.  The
+    frontier is bucketed by ``bucket_of``, so the exact anti-join is
+    bucket-local either way.
 """
 
 from __future__ import annotations
@@ -49,7 +44,6 @@ from ..functions.udfs import (
     canon_parts_udf,
     url_path,
 )
-from . import seenfilter
 
 CANDIDATE_SCHEMA = (
     "discoverer_id long, span_offset int, ordinal int, "
@@ -60,6 +54,14 @@ FRONTIER_COLUMNS = [
     "id", "url", "url_hash", "host", "status", "priority",
     "edition", "last_change", "title", "comment",
 ]
+
+
+def bucket_of(col, nb: int):
+    """Bucket id of a url — THE bucket formula, pmod(xxhash64(url), nb).
+    Frontier bucketing and the bucket-pruned confirm join call it, and
+    ``CrawlEngine.lookup_url``'s driver-side XXH64 twin mirrors it; a
+    split formula drifting would admit URLs twice."""
+    return F.pmod(F.xxhash64(col), F.lit(nb)).cast("int")
 
 
 def empty_candidates(spark: SparkSession) -> DataFrame:
@@ -120,9 +122,7 @@ def admit(
     rnd: int,
     seq_start: int,
     next_id: int,
-    bloom_df: DataFrame | None = None,
     n_buckets: int | None = None,
-    done_df: DataFrame | None = None,
     frontier_for_buckets: Callable[[list[int]], DataFrame | None] | None = None,
     cleanup: list | None = None,
     seq_partitions: int | None = None,
@@ -130,84 +130,54 @@ def admit(
 ) -> tuple[DataFrame, DataFrame]:
     """Run the full admission pipeline.
 
-    Dedup sources, strongest available wins per row:
-      * ``bloom_df`` (sharded per-bucket Bloom table) marks rows
-        ``_maybe`` — definitely-new rows skip the exact join entirely
-      * the exact confirm join runs against ``frontier`` OR, when
-        ``frontier_for_buckets`` is given, against only the buckets
-        that hold maybe-seen rows (one tiny distinct-buckets job)
-    ``with_force=False`` (crawl rounds: outlinks never carry force)
-    skips the force-requeue machinery — its hit-join and union would
-    otherwise run per round just to produce zero rows.  ``done_df``
-    (per-bucket cuckoo of non-QUEUED pages) prefilters which forced
-    candidates need the exact status-confirm join.
+    Dedup is one exact ``left_anti`` join against the frontier: either
+    ``frontier`` itself or, when ``frontier_for_buckets`` is given, only
+    the ``n_buckets``-modulus buckets the candidates hash into (one tiny
+    distinct-buckets job picks them).  ``with_force=False`` (crawl
+    rounds: outlinks never carry force) skips the force-requeue
+    machinery — its hit-join and union would otherwise run per round
+    just to produce zero rows.
 
     Returns (new_frontier_rows, forced_updates) where forced_updates has
     columns (url, comment, last_change) for existing non-QUEUED pages
     being force-requeued (Spider.java:185-188)."""
     cand = filter_and_canonicalize(candidates, config, robots)
-    dedup_possible = frontier is not None or frontier_for_buckets is not None
-    if bloom_df is not None and dedup_possible:
-        cand = seenfilter.probe_blooms(cand, bloom_df, n_buckets)
-    else:
-        cand = cand.withColumn("_maybe", F.lit(True))
     ordkey = F.struct("discoverer_id", "span_offset", "ordinal", "raw_url")
     # cache: the admission DAG fans out into several branches
-    # (maybe/definitely-new, hit/anti-join, forced, new_urls) — without
-    # this the expensive upstream (link extraction + canonicalize UDFs
-    # + the Bloom probe cogroup) would recompute once per branch
+    # (bucket list, anti-join, forced, new_urls) — without this the
+    # expensive upstream (link extraction + canonicalize UDFs) would
+    # recompute once per branch
     cand = cand.withColumn("_ord", ordkey).cache()
     if cleanup is not None:
         cleanup.append(cand)  # caller unpersists after materializing
 
-    if dedup_possible:
-        maybe = cand.filter("_maybe")
-        definitely_new = (
-            cand.filter(~F.col("_maybe")) if bloom_df is not None else None
-        )
-        if frontier_for_buckets is not None:
-            # bucket-pruned confirm join: list the buckets that still
-            # hold maybe rows (tiny job — ≤ n_buckets ints), read only
-            # those frontier dirs.  Only taken on the sharded-filter
-            # path, where maybe ≪ candidates.
-            bks = [
-                r["b"] for r in maybe.select(
-                    seenfilter.bucket_of(F.col("url"), n_buckets).alias("b")
-                ).distinct().collect()
-            ]
-            existing_src = frontier_for_buckets(bks) if bks else None
-        else:
-            existing_src = frontier
-        if existing_src is not None:
-            existing = existing_src.select(
-                "url", F.col("status").alias("_ex_status"))
-            new_cand = maybe.join(existing, "url", "left_anti")
-        else:
-            existing = None
-            new_cand = maybe
-        if definitely_new is not None:
-            new_cand = new_cand.unionByName(definitely_new)
-        if with_force and existing is not None:
-            forceable = cand.filter("force")
-            if done_df is not None:
-                # cuckoo prefilter: only urls in the done (non-QUEUED)
-                # set can be force-requeued; no false negatives, so the
-                # prune is exact-safe ahead of the confirm join
-                forceable = seenfilter.probe_cuckoos(
-                    forceable, done_df, n_buckets).filter("_in_done") \
-                    .drop("_in_done")
-            hit = forceable.join(existing, "url", "inner")
+    if frontier_for_buckets is not None:
+        # bucket-pruned confirm join: list the buckets the candidates
+        # hash into (tiny job — ≤ n_buckets ints), read only those
+        # frontier dirs
+        bks = [
+            r["b"] for r in cand.select(
+                bucket_of(F.col("url"), n_buckets).alias("b")
+            ).distinct().collect()
+        ]
+        existing_src = frontier_for_buckets(bks) if bks else None
+    else:
+        existing_src = frontier
+    forced = None
+    if existing_src is not None:
+        existing = existing_src.select(
+            "url", F.col("status").alias("_ex_status"))
+        new_cand = cand.join(existing, "url", "left_anti")
+        if with_force:
+            hit = cand.filter("force").join(existing, "url", "inner")
             forced = (
                 hit.filter(F.col("_ex_status") != "QUEUED")
                 .groupBy("url")
                 .agg(F.min("_ord").alias("_ord"),
                      F.min_by("comment", "_ord").alias("comment"))
             )
-        else:
-            forced = None
     else:
         new_cand = cand
-        forced = None
 
     # first occurrence per canonical URL wins (get-or-create)
     new_urls = (

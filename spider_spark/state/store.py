@@ -389,10 +389,6 @@ class SnapshotStore:
         b = self.read_catalog().get("buckets", {}).get(table)
         return b.get("sub") if b else None
 
-    def populated_buckets(self, table: str) -> list[int]:
-        b = self.read_catalog().get("buckets", {}).get(table)
-        return sorted(int(k) for k in b["dirs"]) if b else []
-
     def exists(self, table: str) -> bool:
         cat = self.read_catalog()
         return (
@@ -476,7 +472,7 @@ class SnapshotStore:
                 import sys
                 print(f"## write {rel}: {time.time()-t0:.2f}s", file=sys.stderr)
 
-        if len(jobs) > 1 and os.environ.get("SPIDER_SERIAL_COMMIT", "") != "1":
+        if len(jobs) > 1:
             from concurrent.futures import ThreadPoolExecutor
             with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
                 list(pool.map(_write, jobs))
